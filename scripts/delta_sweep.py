@@ -8,7 +8,7 @@ per-round habit by sweeping only:
 
 - ops whose fingerprint (own source + oracle + shared-infra salt, see
   scripts/op_fingerprints.py) differs from the last recorded sweep,
-- plus the current driver window (_PRIORITY_WINDOW) ops — always, so
+- plus the current driver window (the first 50 of queries()) — always, so
   the externally-banked set is never stale at sf0.1,
 - plus anything never swept before (or everything, when the shared
   infra salt changed).
@@ -43,7 +43,7 @@ def main() -> None:
     dry = "--dry-run" in args
     full = "--full" in args
 
-    from carpet_spark.registry import REGISTRY, _PRIORITY_WINDOW
+    from carpet_spark.registry import REGISTRY, queries
 
     fps = current_fingerprints()
     salt = fps.pop("_salt")
@@ -62,7 +62,7 @@ def main() -> None:
     hash_ops = [n for n, op in REGISTRY.items() if op.oracle is not None]
     changed = [n for n in hash_ops if old.get(n) != fps[n]]
     window = [
-        n for n in _PRIORITY_WINDOW
+        n for n in list(queries())[:50]
         if REGISTRY[n].oracle is not None and n not in changed
     ]
     to_sweep = changed + window

@@ -26,16 +26,18 @@ _DURATIONS_FILE = os.path.join(
 # failures).  A bare full-directory run (`pytest tests/ -x -q`, the
 # driver's invocation) therefore selects the DRIVER-FAST subset: every
 # fast module in full, plus one oracle-parity + output-schema op per
-# registry family (first alphabetically — deterministic) and the nine
-# headline bench ops.  ~2,4xx tests, < 5 min, covering every plan pin,
-# every micro-contract and one end-to-end DuckDB parity per family.
+# registry family (first alphabetically — deterministic), the nine
+# headline bench ops and the ops r12 optimized.  1,044 of the 9,180
+# collected tests, covering every plan pin, every micro-contract and one
+# end-to-end DuckDB parity per family.
 #
 # The FULL gate is unchanged and remains the builder-side entrypoint:
 #   python scripts/run_tests_sharded.py 4        (CARPET_SHARD set per worker)
 #   CARPET_FULL=1 python -m pytest tests/ -q     (single process, ~50+ min)
 # Runs that target specific files/tests (fewer than 15 modules collected)
 # are never filtered, so `pytest tests/test_degenerate.py` still runs all
-# of it.  pytest prints the deselection count in its summary line.
+# of it.  A terminal-summary line reports how many tests ran and how
+# many the filter deselected.
 # ---------------------------------------------------------------------------
 
 # headline bench ops (bench.py HEADLINE values) — always in the fast set
@@ -53,6 +55,10 @@ _FAST_ALWAYS_OPS |= {
     "sink_python_datasource_roundtrip", "stream_python_datasource_sink",
     "stream_interval_join", "dedup_near_embedding", "sim_knn_brute",
     "ts_partial_autocorrelation", "sim_ann_ivf",
+    "join_fuzzy_blocked", "text_char_ngram_profile", "dedup_near_simhash",
+    "sim_threshold_sweep", "graph_triangle_count", "graph_common_neighbors",
+    "graph_clustering_coefficient", "graph_connected_components",
+    "stream_alert_episodes", "emb_pca_project",
 }
 # per-op parameterized modules that get the family sample; all other
 # modules are kept whole
@@ -61,6 +67,7 @@ _FAST_SAMPLED_MODULES = ("test_oracle_parity.py", "test_output_schemas.py")
 _FAST_DROPPED_MODULES = (
     "test_degenerate.py", "test_type_lint.py", "test_sf01_regressions.py",
 )
+_FAST_DESELECTED = pytest.StashKey[int]()
 
 
 def _driver_fast_filter(config, items):
@@ -94,6 +101,23 @@ def _driver_fast_filter(config, items):
             keep.append(it)
     items[:] = keep
     config.hook.pytest_deselected(items=dropped)
+    config.stash[_FAST_DESELECTED] = len(dropped)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say so whenever the driver-fast filter ran a subset."""
+    deselected = config.stash.get(_FAST_DESELECTED, 0)
+    if not deselected:
+        return
+    ran = {
+        rep.nodeid
+        for key in ("passed", "failed", "error", "skipped", "xfailed", "xpassed")
+        for rep in terminalreporter.stats.get(key, [])
+    }
+    terminalreporter.write_line(
+        f"driver-fast subset: {len(ran)} tests ran, {deselected} deselected; "
+        "only `python scripts/run_tests_sharded.py 4` certifies a change"
+    )
 
 
 def pytest_collection_modifyitems(config, items):

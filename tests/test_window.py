@@ -6,23 +6,29 @@ which raises ``TypeError: unhashable type`` on array/map cells (that is how
 fn_array burned a verification slot in round 2).  These tests make sure a
 window regression can never ship again:
 
-- the window is exactly 50 registered, duplicate-free names;
+- the window is the first 50 names of ``_DRIVER_ORDER``: registered,
+  duplicate-free, and the head of ``queries()``;
+- the rest of ``_DRIVER_ORDER`` cuts into later windows of 50 that are
+  registered, duplicate-free and disjoint;
+- ``_DRIVER_ORDER`` queues every op the driver has not banked yet;
 - every windowed op with an oracle produces only scalar (hashable)
   top-level columns;
 - rows-only ops in the window are limited to the documented by-design set.
 """
 
+import glob
+import hashlib
+import json
+import os
+
 from pyspark.sql.types import ArrayType, MapType
 
-from carpet_spark.registry import (
-    REGISTRY,
-    _DRIVER_VERIFIED,
-    _PLANNED_WINDOWS,
-    _PRIORITY_WINDOW,
-    queries,
-)
+from carpet_spark.registry import REGISTRY, _DRIVER_ORDER, oracle_sql, queries
 
 SF_SMOKE = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WINDOW = _DRIVER_ORDER[:50]
+
 
 # Approximate / streaming ops whose SURVEY §2 downgrade rule allows a
 # rows-only driver check.  Anything else in the window must carry an oracle.
@@ -52,16 +58,16 @@ ROWS_ONLY_BY_DESIGN = {
 
 
 def test_window_shape():
-    assert len(_PRIORITY_WINDOW) == 50
-    assert len(set(_PRIORITY_WINDOW)) == 50
-    missing = [n for n in _PRIORITY_WINDOW if n not in REGISTRY]
+    assert len(WINDOW) == 50
+    assert len(set(WINDOW)) == 50, "duplicate names in the window"
+    missing = [n for n in WINDOW if n not in REGISTRY]
     assert not missing, f"window names not registered: {missing}"
-    assert list(queries())[:50] == list(_PRIORITY_WINDOW)
+    assert list(queries())[:50] == list(WINDOW)
 
 
 def test_window_oracle_coverage():
     rows_only = [
-        n for n in _PRIORITY_WINDOW if REGISTRY[n].oracle is None
+        n for n in WINDOW if REGISTRY[n].oracle is None
     ]
     assert set(rows_only) <= ROWS_ONLY_BY_DESIGN, (
         f"hash-able op in window without an oracle: "
@@ -93,33 +99,35 @@ PLANNED_REBANKS = {
 
 
 def test_planned_windows_shape():
-    """The r11-r15 burn-down plan (r09 VERDICT item 6) is a valid rotation
-    schedule: every planned window is <=50 duplicate-free registered names,
-    disjoint from the live window and from every other planned window."""
-    seen: set[str] = set(_PRIORITY_WINDOW)
-    for rnd in sorted(_PLANNED_WINDOWS):
-        win = _PLANNED_WINDOWS[rnd]
-        assert 0 < len(win) <= 50, f"r{rnd} window size {len(win)}"
-        assert len(set(win)) == len(win), f"r{rnd} window has duplicates"
+    """The queue after the window, _DRIVER_ORDER[50:], is a valid rotation
+    schedule: cut into windows of 50, every window is registered and
+    duplicate-free, and disjoint from the live window and every other."""
+    seen: set[str] = set(WINDOW)
+    queue = _DRIVER_ORDER[50:]
+    assert queue, "nothing queued after the live window"
+    for start in range(0, len(queue), 50):
+        win = queue[start : start + 50]
+        assert len(set(win)) == len(win), f"window @{start} has duplicates"
         missing = [n for n in win if n not in REGISTRY]
-        assert not missing, f"r{rnd} window names not registered: {missing}"
+        assert not missing, f"window @{start} names not registered: {missing}"
         overlap = set(win) & seen
-        assert not overlap, f"r{rnd} window overlaps earlier windows: {overlap}"
+        assert not overlap, f"window @{start} overlaps earlier windows: {overlap}"
         seen.update(win)
 
 
 def test_planned_windows_cover_all_unbanked():
-    """window + planned windows together schedule EVERY op that lacks a
-    driver bank, and schedule nothing already banked except the documented
-    vacuous re-banks — so finishing the plan leaves zero rotation debt."""
-    planned = {n for win in _PLANNED_WINDOWS.values() for n in win}
-    scheduled = set(_PRIORITY_WINDOW) | planned
-    unbanked = set(REGISTRY) - _DRIVER_VERIFIED
-    not_scheduled = unbanked - scheduled
-    assert not not_scheduled, (
-        f"unbanked ops missing from the burn-down plan: {sorted(not_scheduled)}"
+    """_DRIVER_ORDER schedules EVERY op that lacks a driver bank, and queues
+    nothing already banked except the documented re-banks — so working
+    through it leaves zero rotation debt."""
+    banked: set[str] = set()  # keys of every CORRECTNESS_r*.json
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            banked.update(json.load(f))
+    unscheduled = set(REGISTRY) - banked - set(_DRIVER_ORDER)
+    assert not unscheduled, (
+        f"unbanked ops missing from _DRIVER_ORDER: {sorted(unscheduled)}"
     )
-    rebanks = (scheduled & _DRIVER_VERIFIED) - set(_PRIORITY_WINDOW)
+    rebanks = set(_DRIVER_ORDER[50:]) & banked
     assert rebanks <= PLANNED_REBANKS, (
         f"already-banked ops scheduled without a re-bank rationale: "
         f"{sorted(rebanks - PLANNED_REBANKS)}"
@@ -130,7 +138,7 @@ def test_window_outputs_are_hashable(spark):
     """No array/map top-level columns for oracled window ops — the driver's
     pandas canonicalizer cannot hash them."""
     bad = {}
-    for name in _PRIORITY_WINDOW:
+    for name in WINDOW:
         op = REGISTRY[name]
         if op.oracle is None:
             continue
@@ -143,3 +151,22 @@ def test_window_outputs_are_hashable(spark):
         if cols:
             bad[name] = cols
     assert not bad, f"array/map outputs would crash the driver: {bad}"
+
+
+# sha256 of "\n".join(...) over the driver-facing order.  Any change to
+# queries()/oracle_sql() order (a window rotation, a new op) must update
+# these on purpose.
+QUERIES_ORDER_SHA256 = (
+    "1e9cb1a4bee73689e74bd6432182ce0eebf7d97fe589863f36f3563fbc5a2122"
+)
+ORACLE_ORDER_SHA256 = (
+    "0886840d7767afee71da0812bfbe8e4a39a64978228a1734d8c031e863d88a45"
+)
+
+
+def test_driver_order_pinned():
+    def digest(names):
+        return hashlib.sha256("\n".join(names).encode()).hexdigest()
+
+    assert digest(queries()) == QUERIES_ORDER_SHA256
+    assert digest(oracle_sql()) == ORACLE_ORDER_SHA256
