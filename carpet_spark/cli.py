@@ -41,30 +41,48 @@ class PIIConfig:
     bucket_width: float = 1000.0
 
 
+def _resolver(df: DataFrame):
+    """Map a configured column name onto ``df``'s own spelling of it
+    (None when no column matches) — case-insensitively unless
+    ``spark.sql.caseSensitive`` is true, the way Spark resolves names."""
+    conf = df.sparkSession.conf.get("spark.sql.caseSensitive", "false")
+    if conf.lower() == "true":
+        return {c: c for c in df.columns}.get
+    cols = {c.lower(): c for c in df.columns}
+    return lambda name: cols.get(name.lower())
+
+
 def apply_pii(df: DataFrame, cfg: PIIConfig) -> DataFrame:
     """Apply the redaction plan as a single narrow projection.
 
-    Order of operations on a column that appears in several lists:
-    drop wins; then nullify; then hash/mask/bucket transform in place.
+    Every configured name is resolved once against the input schema, so
+    ``--drop c_email`` drops ``C_EMAIL`` wherever Spark would resolve it;
+    names that match no column are skipped.  Order of operations on a
+    column that appears in several lists: drop wins; then nullify; then
+    hash/mask/bucket transform in place.
     """
-    for c in cfg.nullify:
-        if c in df.columns and c not in cfg.drop:
-            df = df.withColumn(c, F.lit(None).cast(df.schema[c].dataType))
-    for c in cfg.hash:
-        if c in df.columns and c not in cfg.drop:
-            df = df.withColumn(
-                c, F.sha2(F.concat(F.lit(cfg.hash_salt), F.col(c).cast("string")), 256)
-            )
-    for c in cfg.mask:
-        if c in df.columns and c not in cfg.drop:
-            df = df.withColumn(
-                c, F.regexp_replace(F.col(c), cfg.mask_pattern, cfg.mask_replacement)
-            )
-    for c in cfg.bucket:
-        if c in df.columns and c not in cfg.drop and c not in cfg.nullify:
-            df = df.withColumn(c, F.floor(F.col(c) / cfg.bucket_width))
-    if cfg.drop:
-        df = df.drop(*[c for c in cfg.drop if c in df.columns])
+    resolve = _resolver(df)
+
+    def cols(names: list[str], *skip: list[str]) -> list[str]:
+        found = dict.fromkeys(filter(None, map(resolve, names)))
+        return [c for c in found if not any(c in s for s in skip)]
+
+    drop = cols(cfg.drop)
+    nullify = cols(cfg.nullify, drop)
+    for c in nullify:
+        df = df.withColumn(c, F.lit(None).cast(df.schema[c].dataType))
+    for c in cols(cfg.hash, drop):
+        df = df.withColumn(
+            c, F.sha2(F.concat(F.lit(cfg.hash_salt), F.col(c).cast("string")), 256)
+        )
+    for c in cols(cfg.mask, drop):
+        df = df.withColumn(
+            c, F.regexp_replace(F.col(c), cfg.mask_pattern, cfg.mask_replacement)
+        )
+    for c in cols(cfg.bucket, drop, nullify):
+        df = df.withColumn(c, F.floor(F.col(c) / cfg.bucket_width))
+    if drop:
+        df = df.drop(*drop)
     return df
 
 

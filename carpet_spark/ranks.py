@@ -1,29 +1,41 @@
-"""Partition-parallel global ranks and exact percentiles (r12, VERDICT
-items 2 and 8; optimization guide §2/§5).
+"""Partition-parallel global ranks, exact percentiles and ranked prefix
+sums: one range-partitioned prefix mechanism (optimization guide §2/§5).
 
-A ``Window.orderBy(...)`` row_number and Spark's exact ``percentile``
-aggregate share the same scale-killer: every row of the (group's) data
-funnels through ONE task — the window's single partition, or the final
-merge of the percentile aggregate's value buffer.  Fine for bounded audit
-extracts; wrong as a recurring 100 TB pattern.  Both are replaced here by
-the classic two-phase range-partitioned rank:
+A ``Window.orderBy(...)`` row_number, Spark's exact ``percentile``
+aggregate and a ``Window.partitionBy()`` cumulative sum share the same
+scale-killer: every row of the (group's) data funnels through ONE task —
+the window's single partition, or the final merge of the percentile
+aggregate's value buffer.  Fine for bounded audit extracts; wrong as a
+recurring 100 TB pattern.  All three are built here on the classic
+two-phase range-partitioned prefix:
 
-1. ``repartitionByRange`` on (group, order) — the same sampled range
-   exchange a global sort pays; equal keys land in one partition;
-2. per-(group, partition) row counts — a map-side-combined aggregate of
-   |partitions| rows — cumulated into per-partition global offsets;
-3. per-(group, partition) local ``row_number`` + broadcast offset join =
-   the exact global rank, computed |partitions|-wide.
+1. ``range_pinned``: ``repartitionByRange`` on (group, order) — the same
+   sampled range exchange a global sort pays; equal keys land in one
+   partition and partition ids ascend along the key order — with the
+   partition id stored as ``_pid`` and the layout ``localCheckpoint``-ed;
+2. ``range_offsets``: a per-(group, ``_pid``) aggregate — |partitions|
+   rows per group — prefix-summed over ``_pid`` into ``_off`` (the
+   earlier partitions' share) and summed into ``_n`` (the group total);
+3. a within-partition window (local ``row_number`` or running sum) plus
+   the broadcast ``_off`` = the exact global value, computed
+   |partitions|-wide.
 
-The two consumers of the range exchange (counts and local ranks) share
-one shuffle via ReuseExchange; partition ids are therefore consistent
-between them by construction.
+Pin contract: the offsets and the within-partition pass are TWO
+consumers of the range layout, and the range bounds come from a
+nondeterministic SAMPLE of the data.  Two reads of an un-pinned range
+exchange can disagree on every row's partition (AQE coalescing each
+reader differently, or exchange reuse not firing), which silently breaks
+the composed prefix (3,016 of 6,000 sampled ranks wrong at sf0.1).  The
+eager ``localCheckpoint`` materializes ONE layout, with ``_pid`` stored
+as data, so both consumers read the identical partitioning by
+construction; its storage is MEMORY_AND_DISK and a lost block raises
+instead of silently recomputing with fresh bounds.
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from operator import and_, or_
+from operator import and_
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -47,6 +59,45 @@ def _null_safe_join(
     return out.drop(*[f"_r_{k}" for k in keys])
 
 
+def range_pinned(df: DataFrame, key: list[Column]) -> DataFrame:
+    """``df`` range-partitioned on ``key`` with the partition id stored as
+    ``_pid``, materialized once (see the pin contract above).  Partition
+    count is explicit and scale-adaptive — the max of the core count and
+    the configured shuffle width — so AQE cannot re-group the layout."""
+    sess = df.sparkSession
+    try:
+        width = int(sess.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:
+        width = 0
+    n = max(sess.sparkContext.defaultParallelism, width)
+    return (
+        df.repartitionByRange(n, *key)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+
+
+def range_offsets(
+    pinned: DataFrame, group_cols: list[str], part_agg: Column
+) -> DataFrame:
+    """One row per (group, ``_pid``) of ``pinned``: ``_off`` = Σ
+    ``part_agg`` over the group's earlier partitions (0 for the first),
+    ``_n`` = Σ over all of them.  Every group of ``pinned`` appears, also
+    one whose ``part_agg`` is 0 or NULL in every partition."""
+    g = Window.partitionBy(*group_cols)
+    before = g.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        pinned.groupBy(*group_cols, "_pid")
+        .agg(part_agg.alias("_c"))
+        .select(
+            *group_cols,
+            "_pid",
+            F.coalesce(F.sum("_c").over(before), F.lit(0)).alias("_off"),
+            F.sum("_c").over(g).alias("_n"),
+        )
+    )
+
+
 def ranked_by_range(
     df: DataFrame, order_cols: list[str], group_cols: list[str] | None = None
 ) -> DataFrame:
@@ -54,44 +105,12 @@ def ranked_by_range(
     under ``order_cols`` ascending — computed partition-parallel (no
     single-task sort).  Ties take arbitrary order WITHIN equal keys (same
     as any row_number over a non-total order): callers must either pass a
-    total order (unique keys) or be indifferent to tie order (percentile
-    extraction reads values, and equal keys have equal values)."""
+    total order (unique keys) or be indifferent to tie order."""
     group_cols = list(group_cols or [])
-    key = [F.col(c) for c in group_cols + list(order_cols)]
-    # The range partitioning is consumed TWICE (counts and local ranks),
-    # and its bounds come from a nondeterministic SAMPLE of the data — if
-    # the two consumers do not read the same materialized shuffle (AQE
-    # coalescing each reader differently, or stage reuse not firing),
-    # spark_partition_id disagrees between the passes and the composed
-    # ranks silently break (caught at sf0.1: 3016 of 6000 sampled rows).
-    # localCheckpoint materializes the partitioning ONCE, eagerly, so both
-    # passes read the identical partition layout BY CONSTRUCTION — the
-    # same within-query lineage-pin the kmeans++/pagerank iterations use;
-    # its storage is MEMORY_AND_DISK and a lost replica raises instead of
-    # silently recomputing with fresh bounds.  Partition count: explicit
-    # and scale-adaptive (max of core count and configured shuffle width)
-    # so AQE cannot re-group the checkpointed layout either.
-    sess = df.sparkSession
-    try:
-        width = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        width = 0
-    n = max(sess.sparkContext.defaultParallelism, width)
-    rr = df.repartitionByRange(n, *key).localCheckpoint()
-    base = rr.withColumn("_pid", F.spark_partition_id())
-    cnts = base.groupBy(*group_cols, "_pid").agg(F.count(F.lit(1)).alias("_c"))
-    w_off = (
-        Window.partitionBy(*group_cols) if group_cols else Window.partitionBy()
-    ).orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = cnts.select(
-        *group_cols,
-        "_pid",
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
-    )
-    w_lr = Window.partitionBy(*(group_cols + ["_pid"])).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    ranked = base.withColumn("_lr", F.row_number().over(w_lr))
+    pinned = range_pinned(df, [F.col(c) for c in group_cols + order_cols])
+    offs = range_offsets(pinned, group_cols, F.count(F.lit(1))).drop("_n")
+    w_lr = Window.partitionBy(*group_cols, "_pid").orderBy(*order_cols)
+    ranked = pinned.withColumn("_lr", F.row_number().over(w_lr))
     return (
         _null_safe_join(ranked, F.broadcast(offs), group_cols + ["_pid"])
         .withColumn("_rank", (F.col("_off") + F.col("_lr")).cast("long"))
@@ -128,42 +147,42 @@ def group_percentiles_exact(
 
     NaN values are buffered and sort greatest on both implementations
     (SQLOrderingUtil.compareDoubles == the SQL sort order); NULLs are
-    excluded from the buffer and the count, exactly like the aggregate."""
+    excluded from the buffer and the count, exactly like the aggregate.
+
+    The input is read once, through the pin: NULL values stay in the
+    pinned layout but count in neither ``_off`` nor the local rank, so
+    every group, all-NULL ones included, reaches the final aggregate
+    with its ``_n`` from the offsets frame."""
     group_cols = list(group_cols)
-    vals = df.select(
-        *group_cols, F.col(value_col).cast("double").alias("_x")
-    ).filter(F.col("_x").isNotNull())
-    ranked = ranked_by_range(vals, ["_x"], group_cols)
-    gtot = vals.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("_n"))
-    if group_cols:
-        j = _null_safe_join(ranked, F.broadcast(gtot), group_cols)
-    else:
-        j = ranked.crossJoin(F.broadcast(gtot))
+    x = F.col("_x")
+    pinned = range_pinned(
+        df.select(*group_cols, F.col(value_col).cast("double").alias("_x")),
+        [F.col(c) for c in group_cols] + [x],
+    )
+    offs = range_offsets(pinned, group_cols, F.count(x))
+    w_lr = Window.partitionBy(*group_cols, "_pid").orderBy(x.asc_nulls_last())
+    ranked = _null_safe_join(
+        pinned.withColumn("_lr", F.when(x.isNotNull(), F.row_number().over(w_lr))),
+        F.broadcast(offs),
+        group_cols + ["_pid"],
+    ).withColumn("_rank", F.col("_off") + F.col("_lr"))
 
     def pos_expr(p: float) -> Column:
         return F.lit(float(p)) * (F.col("_n") - F.lit(1)).cast("double")
 
-    keep = []
-    for p in percentiles.values():
-        pos = pos_expr(p)
-        keep.append(F.col("_rank") == F.floor(pos) + F.lit(1))
-        keep.append(F.col("_rank") == F.ceil(pos) + F.lit(1))
-    sel = j.filter(reduce(or_, keep))
-
-    aggs = []
+    # one aggregate over every pinned row: all-NULL groups (and an empty
+    # global input, whose global aggregate is still one row) find no
+    # neighbors, hence NULL percentiles — the aggregate's contract
+    aggs = [F.max("_n").alias("_n")]
     for name, p in percentiles.items():
         pos = pos_expr(p)
-        aggs.append(
-            F.max(F.when(F.col("_rank") == F.floor(pos) + F.lit(1), F.col("_x"))).alias(
-                f"_lo_{name}"
+        for side, idx in (("lo", F.floor(pos)), ("hi", F.ceil(pos))):
+            aggs.append(
+                F.max(F.when(F.col("_rank") == idx + F.lit(1), x)).alias(
+                    f"_{side}_{name}"
+                )
             )
-        )
-        aggs.append(
-            F.max(F.when(F.col("_rank") == F.ceil(pos) + F.lit(1), F.col("_x"))).alias(
-                f"_hi_{name}"
-            )
-        )
-    got = sel.groupBy(*group_cols, "_n").agg(*aggs)
+    got = ranked.groupBy(*group_cols).agg(*aggs)
 
     outcols = list(group_cols)
     for name, p in percentiles.items():
@@ -178,16 +197,4 @@ def group_percentiles_exact(
             )
             .alias(name)
         )
-    got = got.select(*outcols)
-
-    # groups with zero non-NULL values (or an empty global input) must
-    # still appear, with NULL percentiles — the aggregate's contract
-    if group_cols:
-        axis = df.select(*group_cols).distinct()
-        return _null_safe_join(axis, got, group_cols, "left")
-    axis = df.sparkSession.range(1).select(F.lit(1).alias("_k"))
-    return (
-        axis.join(got.withColumn("_k", F.lit(1)), "_k", "left")
-        .drop("_k")
-        .select(*[name for name in percentiles])
-    )
+    return got.select(*outcols)

@@ -31,8 +31,8 @@ time, because the returned plan cannot exist without them:
    a memory/file sink so the returned DataFrame reads a completed result.
 4. **Eager ``localCheckpoint``** outside those loops: graph_reciprocity
    and graph_assortativity_degree (shared trade-edge list),
-   agg_abc_classification, ts_partial_autocorrelation, and the
-   ``ranks.ranked_by_range`` consumers agg_percentile, agg_trimmed_mean,
+   ts_partial_autocorrelation, and the ``ranks.range_pinned`` consumers
+   agg_abc_classification, agg_percentile, agg_trimmed_mean,
    agg_winsorized_stats and sample_systematic_every_nth.
 """
 

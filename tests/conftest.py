@@ -27,7 +27,7 @@ _DURATIONS_FILE = os.path.join(
 # driver's invocation) therefore selects the DRIVER-FAST subset: every
 # fast module in full, plus one oracle-parity + output-schema op per
 # registry family (first alphabetically — deterministic), the nine
-# headline bench ops and the ops r12 optimized.  1,044 of the 9,180
+# headline bench ops and the ops r12 optimized.  1,055 of the 9,191
 # collected tests, covering every plan pin, every micro-contract and one
 # end-to-end DuckDB parity per family.
 #
@@ -60,6 +60,8 @@ _FAST_ALWAYS_OPS |= {
     "graph_clustering_coefficient", "graph_connected_components",
     "stream_alert_episodes", "emb_pca_project",
 }
+# ops on the shared ranks.py range prefix
+_FAST_ALWAYS_OPS |= {"agg_abc_classification"}
 # per-op parameterized modules that get the family sample; all other
 # modules are kept whole
 _FAST_SAMPLED_MODULES = ("test_oracle_parity.py", "test_output_schemas.py")

@@ -166,6 +166,51 @@ def test_cli_end_to_end(spark, tmp_path):
     assert not any(ch in "AEIOU" for ch in row.c_mktsegment)
 
 
+@pytest.mark.parametrize("file_upper", [True, False], ids=["upper_file", "upper_flags"])
+def test_cli_mis_cased_names(spark, tmp_path, file_upper):
+    """Flag and file casing differ: every action still lands on its
+    column (Spark resolves names case-insensitively by default)."""
+    from carpet_spark import cli
+
+    src = load(spark, SF_SMOKE, "customer")
+    inp = str(tmp_path / "in")
+    if file_upper:
+        src.toDF(*[c.upper() for c in src.columns]).write.parquet(inp)
+    else:
+        src.write.parquet(inp)
+    flag = str.lower if file_upper else str.upper
+    out = str(tmp_path / "out")
+    cli.main(
+        [
+            inp,
+            out,
+            "--drop", flag("c_acctbal"),
+            "--nullify", flag("c_custkey"),
+            "--hash", flag("c_name"),
+            "--hash-salt", "s",
+            "--mask", flag("c_mktsegment"),
+            "--mask-pattern", "[AEIOU]",
+            "--mask-replacement", "_",
+            "--bucket", flag("c_nationkey"),
+            "--bucket-width", "10",
+        ]
+    )
+    back = spark.read.parquet(out)
+    case = str.upper if file_upper else str.lower
+    assert back.columns == [case(c) for c in src.columns if c != "c_acctbal"]
+    got = sorted(tuple(r) for r in back.collect())
+    want = sorted(
+        (
+            None,
+            hashlib.sha256(f"s{r.c_name}".encode()).hexdigest(),
+            r.c_nationkey // 10,
+            "".join("_" if ch in "AEIOU" else ch for ch in r.c_mktsegment),
+        )
+        for r in src.collect()
+    )
+    assert got == want
+
+
 def test_cli_query_subcommand(spark, tmp_path, capsys):
     """`carpet-spark query OP` runs any registered operator; --output writes
     parquet readable back with the op's schema."""

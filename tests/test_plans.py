@@ -810,3 +810,47 @@ def test_python_datasource_pushdown_prunes_splits(spark, sf_dir):
     for frag in ("EqualTo(part,3)", "GreaterThanOrEqual(id,2000)", "LessThan(id,9000)"):
         assert frag in line, line
     assert df.rdd.getNumPartitions() == 1
+
+
+# Exact percentiles read their input only through the ranks.py range pin
+# (a localCheckpoint, "Scan ExistingRDD"): agg_percentile reads lineitem
+# nowhere else; the two ops that reuse the raw rows after the bounds read
+# it once more.
+@pytest.mark.parametrize(
+    "name,max_scans",
+    [("agg_percentile", 0), ("agg_winsorized_stats", 1), ("agg_trimmed_mean", 1)],
+)
+def test_percentile_ops_read_input_through_the_pin(spark, sf_dir, name, max_scans):
+    df = REGISTRY[name].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") <= max_scans, plan
+
+
+# Jobs an op runs while it is BUILT (eager localCheckpoints: range-bound
+# sampling plus the checkpoint itself), counted on a second build so the
+# source cache is warm.  agg_groupby is the lazy control.
+@pytest.mark.parametrize(
+    "name,jobs",
+    [
+        ("agg_abc_classification", 4),
+        ("agg_percentile", 3),
+        ("agg_trimmed_mean", 3),
+        ("agg_winsorized_stats", 3),
+        ("sample_systematic_every_nth", 3),
+        ("agg_groupby", 0),
+    ],
+)
+def test_construction_jobs_pinned(spark, sf_dir, name, jobs):
+    import uuid
+
+    sc = spark.sparkContext
+    REGISTRY[name].fn(spark, sf_dir)
+    group = f"construct-{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        REGISTRY[name].fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
